@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g (in MiB, Spark's format)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "obie_spark",
     master: str | None = None,
@@ -41,9 +47,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # NOTE: a 48g heap regressed local[32] extraction 4-5x (G1 region
         # management / page churn dominated as system time); 16g keeps GC
-        # flat at every parallelism this sandbox runs. On a real cluster
-        # this is per-executor memory and sized to partition volume.
-        .config("spark.driver.memory", os.environ.get("OBIE_DRIVER_MEM", "16g"))
+        # flat at every parallelism tried, and half of physical memory
+        # leaves room for the Python workers on smaller hosts. On a real
+        # cluster this is per-executor memory and sized to partition volume.
+        .config("spark.driver.memory",
+                os.environ.get("OBIE_DRIVER_MEM", _default_driver_memory()))
         .config("spark.driver.extraJavaOptions", os.environ.get("OBIE_DRIVER_JAVA_OPTS", ""))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

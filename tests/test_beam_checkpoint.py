@@ -1,5 +1,6 @@
 """Beam loop: greedy equivalence, convergence, checkpoint/resume idempotence."""
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,7 +71,8 @@ def test_checkpointer_atomic_commit(spark, tmp_path):
     assert again.count() == 100
 
 
-def test_checkpointer_recovers_from_crash_mid_write(spark, tmp_path):
+@pytest.mark.parametrize("first_commit", ["write", "in_place_commit"])
+def test_checkpointer_recovers_from_crash_mid_write(spark, tmp_path, first_commit):
     """A crash AFTER the data write but BEFORE the manifest commit must
     leave the stage uncommitted: resume re-runs compute() and the
     partial output is fully replaced (manifest-last = the atomic commit
@@ -78,7 +80,12 @@ def test_checkpointer_recovers_from_crash_mid_write(spark, tmp_path):
     import os
 
     ck = Checkpointer(spark, str(tmp_path / "crash"))
-    ck.write("s1", spark.range(40).withColumn("v", F.lit("stale")))
+    stale = spark.range(40).withColumn("v", F.lit("stale"))
+    if first_commit == "write":
+        ck.write("s1", stale)
+    else:
+        stale.write.parquet(str(tmp_path / "sink"))
+        ck.commit("s1", str(tmp_path / "sink"))
     os.remove(ck._manifest("s1"))  # simulate dying before the commit
     assert not ck.exists("s1")     # partial output is NOT a committed stage
     fresh = ck.get_or_compute(
@@ -87,6 +94,39 @@ def test_checkpointer_recovers_from_crash_mid_write(spark, tmp_path):
     assert fresh.count() == 7      # recomputed, stale rows replaced
     assert ck.manifest("s1")["rows"] == 7
     assert {r.v for r in fresh.collect()} == {"fresh"}
+
+
+def test_checkpointer_commits_in_place(spark, tmp_path):
+    """commit() records data where it already is (the Iceberg commit
+    contract): the manifest names the directory, read() follows it, and
+    the checkpoint holds lineage + manifest but no copy of the data."""
+    import os
+
+    sink = str(tmp_path / "sink")
+    df = spark.range(60).withColumn("part", (F.col("id") % 3).cast("string"))
+    df.write.partitionBy("part").parquet(sink)
+
+    ck = Checkpointer(spark, str(tmp_path / "ck"))
+    m = ck.commit("s1", sink, partition_by=["part"], meta={"note": "test"})
+    assert ck.exists("s1") and ck.manifest("s1") == m
+    assert m["path"] == sink and m["rows"] == 60 and m["partition_by"] == ["part"]
+    assert m["meta"] == {"note": "test"}
+    assert sorted(os.listdir(tmp_path / "ck" / "s1")) == ["_MANIFEST.json", "_lineage"]
+    # Spark skips "_"-prefixed paths, so the lineage is read with pyarrow
+    lineage = pq.read_table(str(tmp_path / "ck" / "s1" / "_lineage")).to_pandas()
+    assert lineage["rows"].sum() == 60 and set(lineage["stage"]) == {"s1"}
+
+    back = ck.read("s1")
+    assert back.count() == 60
+    assert len(back.inputFiles()) == len(lineage)
+    assert all(f"{sink}/part=" in f for f in back.inputFiles())
+    assert ck.verify("s1", sink + "/") == 60
+
+    with pytest.raises(RuntimeError, match="is committed at"):
+        ck.verify("s1", str(tmp_path / "elsewhere"))
+    df.filter("id < 30").write.mode("overwrite").partitionBy("part").parquet(sink)
+    with pytest.raises(RuntimeError, match="holds 30 rows"):
+        ck.verify("s1", sink)
 
 
 def test_beam_recovers_from_wrong_seed(ctx):

@@ -159,6 +159,11 @@ def test_submit_incremental_equals_full(spark, tmp_path):
     n_changed = int(perturbed.sum()) + 2   # perturbed + the 2 new docs
     assert f"re-extracted {n_changed} changed docs" in p.stdout
     assert "dropped 1 deleted" in p.stdout
+    # the sink is committed in place: the checkpoint holds no triples copy
+    assert sorted(os.listdir(f"{d['ck']}/triples")) == ["_MANIFEST.json", "_lineage"]
+    man = json.load(open(f"{d['ck']}/triples/_MANIFEST.json"))
+    assert man["path"] == d["inc_out"] and man["partition_by"] == ["repo", "lang"]
+    assert man["rows"] == spark.read.parquet(d["inc_out"]).count()
 
     # incremental shares extract's manifest-gated idempotent resume: a
     # re-run verifies the committed digest and does no CDC work
